@@ -396,6 +396,10 @@ def ivf_assign(
     Raises ``ValueError`` on an empty centroid list (the pre-r13
     expression form returned a null cluster column instead; no current
     caller passes empty centroids — they guard or train first)."""
+    # plain Python floats from here on: numpy arrays and np.float32
+    # scalars are not JSON-serializable (and an ndarray has no truth
+    # value for the emptiness check)
+    centroids = [[float(x) for x in c] for c in centroids]
     if not centroids:
         raise ValueError("ivf_assign: centroids must be non-empty")
     v = f"`{vec_col}`"
@@ -405,7 +409,6 @@ def ivf_assign(
     for c in centroids:
         acc = 0.0
         for x in c:
-            x = float(x)
             finite = finite and math.isfinite(x)
             acc += x * x
         norms.append(math.sqrt(acc))

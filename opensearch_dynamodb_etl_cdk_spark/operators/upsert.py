@@ -5,21 +5,21 @@ key with action index/upsert/delete derived from the CDC event type
 (custom_resource.py:350-351,370-371; NEW_IMAGE stream view). The
 materialized index is therefore the per-key latest image. Spark-first:
 
-- within a batch: window ``row_number() == 1`` over
-  ``partitionBy(key).orderBy(desc(seq))`` — never rely on task order
+- per key, the highest sequence number wins — never task order
   (SURVEY §7.3 known-hard #1);
-- across batches: merge = current index anti-joined by superseded keys,
-  unioned with the batch's surviving upserts (MERGE emulation without
-  Delta, SURVEY §7.3 #3).
+- across batches: merge = the per-key latest over stored rows ∪ batch
+  rows, in one reduction (MERGE emulation without Delta, SURVEY §7.3
+  #3).
 
-Scale notes: the window and the anti-join both shuffle on the key —
-unavoidable for keyed semantics, and proportional to |batch| + |touched
-index partitions|, not |index|, once the index is stored partitioned by
-a stable hash of the key (see streaming/pipeline.py). AQE handles key
-skew; the per-key latest reduction is also expressible as
-``max_by(struct, seq)`` groupBy for map-side partial aggregation — used
-here because it combines before the shuffle (less shuffle volume than
-row_number over raw rows).
+Scale notes: the reduction shuffles once, on the key — unavoidable for
+keyed semantics. Its input is |batch| + |stored rows of the touched
+index partitions|, not |index|, once the index is stored partitioned
+by a stable hash of the key (see streaming/pipeline.py); with a batch
+that touches every partition, that is the whole index. The per-key
+latest is a ``max_by(struct, seq)`` groupBy, which combines map-side
+before the shuffle (less shuffle volume than row_number over raw rows)
+unless the caller co-locates rows by a partition column first
+(``partition_by``), which makes that repartition the only shuffle.
 """
 
 from __future__ import annotations
@@ -44,7 +44,10 @@ def derive_action(event_name: Column) -> Column:
 
 
 def latest_by_key(
-    df: DataFrame, key: str = "_id", seq: str = SEQ_COL
+    df: DataFrame,
+    key: str = "_id",
+    seq: str = SEQ_COL,
+    partition_by: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Per-key latest row by sequence number.
 
@@ -53,15 +56,34 @@ def latest_by_key(
     is one row per distinct key per input partition, not every event.
     Duplicate (key, seq) deliveries (at-least-once) collapse to one row
     because max_by picks a single struct.
+
+    ``partition_by=(col, n)`` names a column that is a function of the
+    key (the index's hash bucket). The rows are then repartitioned into
+    ``n`` partitions on ``col`` — the plan's only shuffle — and reduced
+    per (``col``, key) inside each partition, so the result stays
+    hash-partitioned on ``col``: a write partitioned by ``col`` needs no
+    further shuffle and produces one file per ``col`` value.
     """
     cols = [c for c in df.columns]
+    keys = [F.col(key).alias("__k")]
+    if partition_by is not None:
+        part_col, n = partition_by
+        df = df.repartition(n, part_col)
+        keys.insert(0, F.col(part_col).alias("__p"))
     packed = df.select(
-        F.col(key).alias("__k"),
+        *keys,
         F.col(seq).alias("__s"),
         F.struct(*cols).alias("__row"),
     )
-    latest = packed.groupBy("__k").agg(F.max_by("__row", "__s").alias("__row"))
-    return latest.select("__row.*")
+    latest = packed.groupBy(*packed.columns[:len(keys)]).agg(
+        F.max_by("__row", "__s").alias("__row"))
+    if partition_by is None:
+        return latest.select("__row.*")
+    # the grouping column, not its copy inside the struct, so the
+    # output keeps the repartition's partitioning
+    return latest.select(*(
+        F.col("__p").alias(c) if c == part_col else F.col(f"__row.`{c}`")
+        for c in cols))
 
 
 def apply_cdc_batch(
@@ -71,6 +93,7 @@ def apply_cdc_batch(
     seq: str = SEQ_COL,
     action: str = ACTION_COL,
     keep_tombstones: bool = False,
+    partition_by: tuple[str, int] | None = None,
 ) -> DataFrame:
     """MERGE a CDC micro-batch into the current index frame.
 
@@ -94,10 +117,13 @@ def apply_cdc_batch(
     carrying their sequence number, so the stale upsert loses the
     ``max_by`` and stays dead. Read paths must filter ``_deleted``;
     compaction can purge (see streaming/pipeline.py).
+
+    Stored rows and batch rows go through ONE per-key reduction (one
+    shuffle); ``partition_by`` is passed to :func:`latest_by_key`.
     """
-    latest = latest_by_key(batch, key=key, seq=seq)
-    prior = index
-    if prior is not None:
+    rows = batch
+    if index is not None:
+        prior = index
         if seq not in prior.columns:  # legacy index written without seq
             prior = prior.withColumn(seq, F.lit(-1).cast("long"))
         if DELETED_COL in prior.columns:
@@ -107,9 +133,8 @@ def apply_cdc_batch(
             ).drop(DELETED_COL)
         else:
             prior = prior.withColumn(action, F.lit("index"))
-        merged = latest_by_key(prior.unionByName(latest), key=key, seq=seq)
-    else:
-        merged = latest
+        rows = prior.unionByName(batch)
+    merged = latest_by_key(rows, key=key, seq=seq, partition_by=partition_by)
     if keep_tombstones:
         return merged.withColumn(
             DELETED_COL, F.col(action) == "delete"

@@ -19,9 +19,12 @@ Regenerate after an intentional plan change:
 
 Snapshots are taken at sf0.001 (plan SHAPE is scale-invariant here:
 the catalog pins broadcast/bucket decisions by construction, and the
-tiny fixture keeps regeneration fast). EAGER trainer entries are
-excluded — their fn() executes work, so they have no single static
-plan to freeze.
+tiny fixture keeps regeneration fast) and at a canonical parallelism
+of 32, whatever the core count of the rendering session: the session
+sizes ``spark.sql.shuffle.partitions`` and ``defaultParallelism`` from
+its cores, and both surface in plan text as partition counts. EAGER
+trainer entries are excluded — their fn() executes work, so they have
+no single static plan to freeze.
 """
 
 from __future__ import annotations
@@ -31,6 +34,8 @@ import os
 import re
 
 SNAPSHOT_SF_DIR = "/root/testdata/sf0.001"
+# the parallelism the committed digests were rendered at
+CANONICAL_PARALLELISM = 32
 PLANS_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "..", "..", "PLANS.md"
 )
@@ -124,16 +129,29 @@ def snapshot_blocks(spark, sf_dir: str = SNAPSHOT_SF_DIR) -> list[str]:
     spark.catalog.clearCache()
     _tail._PQ_CACHE.clear()
     _tail._IVFPQ_CACHE.clear()
-    blocks = []
-    for name in headline_queries():
-        df = CATALOG[name].fn(spark, sf_dir)
-        plan = formatted_plan(df)
-        c = census(plan)
-        digest = hashlib.sha256(
-            normalize(plan).encode("utf-8")).hexdigest()[:16]
-        stats = ", ".join(f"{k}={v}" for k, v in c.items())
-        blocks.append(f"## {name}\n- {stats}\n- sha256: {digest}\n")
-    return blocks
+    # Core-count independence: pin the shuffle partition count for the
+    # render, and map repartitions sized from the session's
+    # defaultParallelism (session.min_partitions) to the canonical
+    # count. Only the count is rewritten; the operator stays in the
+    # digest, so a real plan-shape change still fails.
+    conf_key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, str(CANONICAL_PARALLELISM))
+    local_rr = f"RoundRobinPartitioning({spark.sparkContext.defaultParallelism})"
+    canonical_rr = f"RoundRobinPartitioning({CANONICAL_PARALLELISM})"
+    try:
+        blocks = []
+        for name in headline_queries():
+            df = CATALOG[name].fn(spark, sf_dir)
+            plan = formatted_plan(df).replace(local_rr, canonical_rr)
+            c = census(plan)
+            digest = hashlib.sha256(
+                normalize(plan).encode("utf-8")).hexdigest()[:16]
+            stats = ", ".join(f"{k}={v}" for k, v in c.items())
+            blocks.append(f"## {name}\n- {stats}\n- sha256: {digest}\n")
+        return blocks
+    finally:
+        spark.conf.set(conf_key, saved)
 
 
 def render(spark, sf_dir: str = SNAPSHOT_SF_DIR) -> str:

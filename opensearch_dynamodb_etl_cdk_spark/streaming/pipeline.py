@@ -24,10 +24,19 @@ upsert.
 Scale notes:
 - The index "table" is hash-partitioned parquet (``bucket = hash(_id) %
   n_buckets`` directory partitioning). A micro-batch only rewrites the
-  buckets it touches — merge cost tracks |batch|, not |index|.
+  buckets it touches, one file each. Per-epoch cost is a fixed number
+  of Spark jobs (per route a pass that caches the slice and observes
+  its touched buckets, a schema read, a one-shuffle merge and a write;
+  then one pass for the ``_metrics`` counts and their write: 12 jobs
+  for two routes) plus work proportional to the stored rows of the
+  touched buckets. A batch whose keys spread over every bucket — 2,000
+  events against 16 buckets already do — rewrites the whole index, so
+  the cost tracks |index| until ``n_buckets`` is large next to the
+  batch's key spread.
 - On a cluster this would be Delta/Iceberg MERGE INTO; the emulation
-  here keeps the same logical plan (anti-join + union per touched
-  partition) without requiring their jars (not in this image).
+  here keeps the same logical result (per touched partition, the
+  per-key latest over stored ∪ batch rows) without requiring their
+  jars (not in this image).
 - Per-key ordering inside a batch is by sequence number via max_by —
   never task order. Across batches the index stores ``_seq`` per row
   and the merge takes the per-key max over union(stored, batch), so a
@@ -45,7 +54,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -89,14 +98,33 @@ def _describe_error(exc: Exception, limit: int = 4000) -> str:
     return msg[:limit]
 
 
+def _observe_pass(df: DataFrame, **aggs: Column) -> dict:
+    """Evaluate named aggregates over ``df`` in one job with no shuffle
+    (an observed no-op write); fills ``df``'s cache when it is
+    persisted. Only the aggregate values reach the driver."""
+    seen = Observation()
+    df.observe(seen, *(c.alias(n) for n, c in aggs.items())).write.format(
+        "noop").mode("overwrite").save()
+    return seen.get
+
+
+def _bucket_of(n_buckets: int) -> Column:
+    """A row's hash bucket: ``pmod(xxhash64(_id), n_buckets)``."""
+    return F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
+
+
 @dataclass
 class PipelineConfig:
     """Mirrors the reference's 60-line YAML pipeline definition
     (custom_resource.py:324-384): routes + per-route sink + DLQ.
 
-    ``n_buckets`` sizes the index's hash partitioning: per-batch merge
-    cost ∝ touched buckets, so size it ≫ expected concurrent-batch key
-    spread but ≪ total keys (each bucket should hold enough rows for
+    ``n_buckets`` sizes the index's hash partitioning. An epoch costs
+    a fixed number of Spark jobs plus a rewrite of every bucket it
+    touches, and a batch of k distinct keys touches about
+    ``n_buckets · (1 − e^(−k/n_buckets))`` buckets: with k ≫ n_buckets
+    (2,000 events against the default 16) every epoch rewrites the
+    whole index. Size it ≫ the per-epoch key spread for the rewrite to
+    shrink, but ≪ total keys (each bucket should hold enough rows for
     healthy parquet files). 16 suits the test corpus; a 100 TB index
     wants O(10⁴) so a micro-batch rewrites a small fraction of data."""
 
@@ -234,7 +262,7 @@ class FlightsEtlPipeline:
             (F.col("seq").cast("long") * 2).alias("_seq"),
             derive_action(F.col("event_name")).alias("_action"),
             *unmarshal(parsed, self.cfg.attrs, aliases=self.cfg.aliases),
-        ).withColumn("_bucket", F.pmod(F.xxhash64("_id"), F.lit(self.cfg.n_buckets)))
+        ).withColumn("_bucket", _bucket_of(self.cfg.n_buckets))
 
     def transform_export(self, items: DataFrame, base_seq: int = 0) -> DataFrame:
         """Export snapshot rows (item_json) → same shape as a CDC batch of
@@ -265,48 +293,58 @@ class FlightsEtlPipeline:
         """MERGE one route's slice of a micro-batch into its index table.
 
         Only the hash buckets present in the batch are rewritten
-        (dynamic partition overwrite) — merge cost ∝ touched buckets.
-        Buckets the batch touched but the merge left empty (deletes
-        wiped every doc in them) are removed from disk explicitly:
-        dynamic overwrite only replaces partitions present in the
-        output, so without this step deleted documents would survive.
+        (dynamic partition overwrite), one file per bucket. Stored rows
+        of those buckets ∪ batch rows go through one shuffle: a
+        repartition on ``_bucket``, then the per-key latest inside each
+        partition. Buckets the batch touched but the merge left empty
+        (deletes wiped every doc in them) are removed from disk
+        explicitly: dynamic overwrite only replaces partitions present
+        in the output, so without this step deleted documents would
+        survive.
         """
         # the route's LIVE bucket count governs placement — a resized
         # index (_split/_shrink) differs from cfg.n_buckets, so the
         # batch's precomputed _bucket is recomputed here, the one place
-        # bucket placement is decided
+        # bucket placement is decided. Persisted so the touched set and
+        # the merge read the same rows even when the slice is not
+        # deterministic (a reindex script may derive _id from the
+        # clock, which each query reads anew); the touched buckets are
+        # observed while one job with no shuffle fills the cache
+        # (bounded: <= n_buckets ids).
         nb = self._route_n_buckets(route)
-        batch = route_df.withColumn(
-            "_bucket", F.pmod(F.xxhash64("_id"), F.lit(nb))
-        ).persist()
+        batch = route_df.withColumn("_bucket", _bucket_of(nb)).persist()
         try:
-            # bounded: one row per distinct hash bucket (<= n_buckets)
-            touched = [r._bucket for r in batch.select("_bucket").distinct().collect()]
+            touched = _observe_pass(
+                batch, buckets=F.collect_set("_bucket"))["buckets"]
             if not touched:
                 return
             current = self.read_index(route)
             if current is not None:
                 current = current.filter(F.col("_bucket").isin(touched))
             merged = apply_cdc_batch(
-                current, batch, keep_tombstones=self.cfg.keep_tombstones
+                current, batch, keep_tombstones=self.cfg.keep_tombstones,
+                partition_by=("_bucket", len(touched)),
             )
             # Materialize before writing: the merge plan reads the same
-            # parquet files the write is about to replace (no Delta txn log
-            # in this image) — localCheckpoint breaks the lineage so the
-            # overwrite never races its own input.
-            merged = merged.localCheckpoint(eager=True)
+            # parquet files the write is about to replace (no Delta txn
+            # log in this image) — localCheckpoint breaks the lineage so
+            # the overwrite never races its own input. The merge's
+            # partitions each hold whole buckets, so the write needs no
+            # shuffle; the surviving buckets are observed while the
+            # checkpoint runs (bounded: <= n_buckets ids), which costs
+            # no job of its own.
+            surviving = Observation()
+            merged = merged.observe(
+                surviving, F.collect_set("_bucket").alias("buckets")
+            ).localCheckpoint(eager=True)
             (
-                merged.repartition(max(1, len(touched)), "_bucket")
-                .write.mode("overwrite")
+                merged.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_bucket")
                 .parquet(self._index_path(route))
             )
-            surviving = {
-                # bounded: one row per hash bucket (<= n_buckets)
-                r._bucket for r in merged.select("_bucket").distinct().collect()
-            }
-            self._remove_buckets(route, set(touched) - surviving)
+            self._remove_buckets(
+                route, set(touched) - set(surviving.get["buckets"]))
         finally:
             batch.unpersist()
 
@@ -430,13 +468,9 @@ class FlightsEtlPipeline:
         except Exception:
             pass
         if n:
-            mdf = self.spark.createDataFrame(
-                [(epoch_id, route, n, n, n, n_delete, 0)],
-                "epoch long, route string, rows_in long, rows_routed long, "
-                "rows_merged long, rows_deleted long, rows_dlq long",
-            )
             (
-                mdf.coalesce(1)
+                self._metrics_frame([(epoch_id, route, n, n, n, n_delete, 0)])
+                .coalesce(1)
                 .write.mode("append")
                 .partitionBy("epoch")
                 .parquet(os.path.join(self.cfg.index_root, "_metrics"))
@@ -486,21 +520,45 @@ class FlightsEtlPipeline:
     # -- observability (W5 — reference analog: the vended CloudWatch log
     #    group, lib/opensearch-dynamodb-etl-cdk-stack.ts:104-108) ---------
 
+    _METRICS_SCHEMA = (
+        "epoch long, route string, rows_in long, rows_routed long, "
+        "rows_merged long, rows_deleted long, rows_dlq long"
+    )
+
+    def _metrics_frame(self, rows: list[tuple]) -> DataFrame:
+        """A few ``_metrics`` rows as a JVM-side frame: one JSON literal
+        expanded by ``inline(from_json(...))``. ``createDataFrame(list)``
+        plans as a Python RDD scan and starts a Python worker to
+        serialize a handful of rows; this plans as Range + Generate.
+        ``from_json`` leaves every column nullable, as the table's
+        parquet schema has always had them."""
+        import json
+
+        names = [f.split()[0] for f in self._METRICS_SCHEMA.split(", ")]
+        text = json.dumps([dict(zip(names, r)) for r in rows])
+        return self.spark.range(1).select(F.inline(F.from_json(
+            F.lit(text), f"array<struct<{self._METRICS_SCHEMA}>>"
+        )))
+
     def _write_metrics(
         self, batch: DataFrame, epoch_id: int, dlq_counts: dict[str, int]
     ) -> None:
-        """Append one row per route (plus the audited drop) to the
+        """Write one row per route (plus the audited drop) to the
         ``_metrics`` table: rows in / routed / merged / deleted / DLQ'd
-        per micro-batch. One extra aggregation job over the already-
-        persisted batch — counts, never data, reach the driver."""
-        tagged = self.router.tag(
-            batch.filter(F.col("_action") != "delete"), "_route"
+        per micro-batch. One pass with no shuffle over the already-
+        persisted batch — counts, never data, reach the driver:
+        deletes, and upserts per route under exclusive first-match
+        tagging plus ``UNROUTED``."""
+        is_del = F.col("_action") == "delete"
+        names = (*self.cfg.routes, UNROUTED)
+        counts = _observe_pass(
+            self.router.tag(batch, "_route"),
+            deleted=F.count_if(is_del),
+            **{f"routed{i}": F.count_if(~is_del & (F.col("_route") == n))
+               for i, n in enumerate(names)},
         )
-        route_counts = {
-            r["_route"]: r["n"]
-            for r in tagged.groupBy("_route").agg(F.count("*").alias("n")).collect()
-        }
-        n_delete = batch.filter(F.col("_action") == "delete").count()
+        n_delete = counts["deleted"]
+        route_counts = {n: counts[f"routed{i}"] for i, n in enumerate(names)}
         n_in = sum(route_counts.values()) + n_delete
         rows = []
         for route in self.cfg.routes:
@@ -511,16 +569,11 @@ class FlightsEtlPipeline:
         rows.append(
             (epoch_id, "dropped", n_in, route_counts.get(UNROUTED, 0), 0, 0, 0)
         )
-        mdf = self.spark.createDataFrame(
-            rows,
-            "epoch long, route string, rows_in long, rows_routed long, "
-            "rows_merged long, rows_deleted long, rows_dlq long",
-        )
         # partitioned by epoch + dynamic overwrite: re-delivery of a
         # failed micro-batch rewrites its own epoch's rows instead of
         # appending duplicates — metrics stay exactly-once like the data.
         (
-            mdf.coalesce(1)
+            self._metrics_frame(rows).coalesce(1)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("epoch")
@@ -748,7 +801,7 @@ class FlightsEtlPipeline:
             r._bucket for r in current.select("_bucket").distinct().collect()
         }
         snapshot = current.withColumn(
-            "_bucket", F.pmod(F.xxhash64("_id"), F.lit(new_n))
+            "_bucket", _bucket_of(new_n)
         ).localCheckpoint(eager=True)  # break lineage vs the overwrite
         (
             snapshot.write.mode("overwrite")
@@ -3761,7 +3814,7 @@ class FlightsEtlPipeline:
         for f in frames[1:]:
             batch = batch.unionByName(f)
         batch = batch.withColumn(
-            "_bucket", F.pmod(F.xxhash64("_id"), F.lit(self.cfg.n_buckets))
+            "_bucket", _bucket_of(self.cfg.n_buckets)
         )
         self._merge_route(batch, route)
         return {"items": len(actions), **counts}

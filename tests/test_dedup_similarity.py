@@ -207,6 +207,31 @@ def test_ivf_indexed_matches_oneshot(spark):
     ]
 
 
+def test_ivf_assign_accepts_numpy_centroids(spark):
+    """A 2-D ndarray, a list of float32 rows, or a list of np.float32
+    scalars assigns exactly like the same centroids as Python floats."""
+    import numpy as np
+
+    rng = random.Random(23)
+    cents32 = np.array(
+        [[rng.gauss(0, 1) for _ in range(8)] for _ in range(3)],
+        dtype=np.float32)
+    rows = [(i, [float(x) + rng.gauss(0, 0.05) for x in cents32[i % 3]])
+            for i in range(12)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def assign(cents):
+        out = S.ivf_assign(df, cents, cluster_col="c").orderBy("vec_id")
+        return [r.c for r in out.collect()]
+
+    want = assign(cents32.tolist())  # Python floats, the reference
+    assert want == [i % 3 for i in range(12)]
+    assert assign(cents32) == want
+    assert assign(cents32.astype(np.float64)) == want
+    assert assign(list(cents32)) == want
+    assert assign([[np.float32(x) for x in c] for c in cents32]) == want
+
+
 def test_ivf_ann_recall_on_clusters(spark):
     """IVF with enough probes must recover the exact top-k on clustered
     data (the true neighbours live in the probed cells)."""

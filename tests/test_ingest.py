@@ -127,3 +127,28 @@ def test_reindex_with_pipeline(pipe):
         pipe.reindex("fare", "fare-broken", pipeline={
             "processors": [{"remove": {"field": "_id"}}]})
     assert pipe.index_view("fare-broken") is None
+
+
+def test_reindex_nondeterministic_id_keeps_dest_docs(pipe):
+    """A pipeline whose script derives ``_id`` from the clock gives a
+    copied document a different key in every query that evaluates it.
+    The merge must find the touched buckets and write the merged rows
+    from the same evaluation of the batch, or a bucket only the second
+    evaluation reaches is overwritten with just the new rows and its
+    stored documents are lost."""
+    pipe.reindex("fare", "fare-copy")
+    stored = {r._id for r in pipe.index_view("fare-copy").select("_id").collect()}
+    assert stored
+    clock_ids = {"processors": [{"script": {
+        "target_field": "_id",
+        "source": "concat('t-', cast(unix_micros(current_timestamp()) as string))",
+    }}]}
+    ids = sorted(r._id for r in pipe.index_view("fare").select("_id").collect())
+    added = 0
+    for doc_id in ids[:3]:  # one doc at a time: one bucket of 16 each
+        added += pipe.reindex("fare", "fare-copy", pipeline=clock_ids,
+                              query={"ids": {"values": [doc_id]}})
+    after = {r._id for r in pipe.index_view("fare-copy").select("_id").collect()}
+    assert added == 3
+    assert stored <= after
+    assert len(after) == len(stored) + added
